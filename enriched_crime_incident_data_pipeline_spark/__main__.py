@@ -27,39 +27,9 @@ import argparse
 import logging
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 log = logging.getLogger("enriched_crime_incident_data_pipeline_spark")
-
-
-def _build_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full §3.1 pipeline over the fixture tables: returns the
-    enriched incidents DataFrame (all columns, pre-projection)."""
-    from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
-        dedup_and_propagate,
-    )
-    from enriched_crime_incident_data_pipeline_spark.enrich.geocode import (
-        with_coordinates,
-    )
-    from enriched_crime_incident_data_pipeline_spark.operators.derive import (
-        to_silver,
-    )
-    from enriched_crime_incident_data_pipeline_spark.plans import (
-        events_as_incidents_raw,
-        synthetic_location_dim,
-        synthetic_weather_hourly,
-    )
-    from enriched_crime_incident_data_pipeline_spark.plans.pipeline import (
-        enrich_after_emsstat,
-    )
-    from enriched_crime_incident_data_pipeline_spark.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    silver = to_silver(events_as_incidents_raw(events))
-    base = dedup_and_propagate(silver).persist()
-    dim = synthetic_location_dim(events)
-    wh = synthetic_weather_hourly(with_coordinates(base, dim))
-    return enrich_after_emsstat(base, dim, wh)
 
 
 def _log_health(enriched: DataFrame) -> None:
@@ -131,6 +101,9 @@ def main(argv: list[str] | None = None) -> int:
     setup_logging()
 
     from enriched_crime_incident_data_pipeline_spark import get_spark, registry
+    from enriched_crime_incident_data_pipeline_spark.plans.pipeline import (
+        build_enriched,
+    )
     from enriched_crime_incident_data_pipeline_spark.sinks.output import (
         gold_projection,
         write_csv,
@@ -156,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     spark = get_spark(app_name=f"pipeline-{args.command}")
-    enriched = _build_enriched(spark, args.sf_dir)
+    enriched = build_enriched(spark, args.sf_dir)
 
     if args.command == "report":
         _log_health(enriched)

@@ -155,8 +155,8 @@ def with_unigram_lm_scores(
     9.7 s — the round-robin exchange ships the full text and every
     downstream stage pays 32 tasks of scheduling, while the fold
     itself is cheap at this corpus size. The flag stays for genuinely
-    CPU-bound corpora; on a cluster the input arrives already split
-    and ``fan_out`` is conf-disabled either way.
+    CPU-bound corpora; on a cluster the input arrives already split,
+    so leave it off there too.
 
     ``model=(cmap, nv)`` injects pre-collected counts — composed
     builds use it to fold this model's collection into ONE driver job

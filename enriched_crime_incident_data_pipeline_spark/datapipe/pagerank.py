@@ -52,10 +52,6 @@ from enriched_crime_incident_data_pipeline_spark.datapipe.clusters import (
 ALPHA = 0.15
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
 def _pagerank_local(
     head,
     iters: int,
@@ -276,19 +272,19 @@ def pagerank(
                 )
             )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    weighted = _pin(
+    weighted = (
         edges.join(deg, "src").select(
             "src", "dst", F.col("outdeg").cast("double").alias("outdeg")
         )
-    )
+    ).localCheckpoint(eager=True)
     if dangling:
-        dang = _pin(
+        dang = (
             nodes.join(
                 weighted.select("src").distinct(),
                 nodes["id"] == F.col("src"),
                 "left_anti",
             ).select("id")
-        )
+        ).localCheckpoint(eager=True)
         n_nodes = float(nodes.count())
     ranks = nodes.select("id", F.lit(1.0).alias("rank"))
     rounds = 0
@@ -317,12 +313,12 @@ def pagerank(
                 ranks.join(dang, "id").agg(F.sum("rank")).first()[0] or 0.0
             )
             incoming = incoming + F.lit(dmass / n_nodes)
-        ranks = _pin(
+        ranks = (
             nodes.join(summed, nodes["id"] == summed["dst"], "left").select(
                 "id",
                 (F.lit(alpha) + F.lit(1.0 - alpha) * incoming).alias("rank"),
             )
-        )
+        ).localCheckpoint(eager=True)
         rounds += 1
         if tol is not None:
             delta = (
@@ -473,18 +469,18 @@ def personalized_pagerank(
                 )
             )
     deg = e_proj.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    weighted = _pin(
+    weighted = (
         e_proj.join(deg, "src").select(
             "src", "dst", F.col("outdeg").cast("double").alias("outdeg")
         )
-    )
-    flags = _pin(
+    ).localCheckpoint(eager=True)
+    flags = (
         nodes.select("id")
         .join(
             F.broadcast(seed_ids.withColumn("_s", F.lit(1))), "id", "left"
         )
         .select("id", F.coalesce("_s", F.lit(0)).alias("_s"))
-    )
+    ).localCheckpoint(eager=True)
     ranks = flags.select(
         "id", F.col("_s").cast("double").alias("rank")
     )
@@ -507,7 +503,7 @@ def personalized_pagerank(
         else:
             summed = contribs.groupBy("dst").agg(F.sum("c").alias("s"))
         incoming = F.coalesce(F.col("s"), F.lit(0.0))
-        ranks = _pin(
+        ranks = (
             flags.join(summed, flags["id"] == summed["dst"], "left").select(
                 "id",
                 (
@@ -515,5 +511,5 @@ def personalized_pagerank(
                     + F.lit(1.0 - alpha) * incoming
                 ).alias("rank"),
             )
-        )
+        ).localCheckpoint(eager=True)
     return ranks

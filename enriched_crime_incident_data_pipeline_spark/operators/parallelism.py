@@ -3,49 +3,25 @@
 Small parquet inputs arrive as 1-2 partitions (one per file split);
 CPU-heavy per-row derivations (regex tokenize, shingling, hashing)
 then run serially no matter how many cores exist. ``fan_out`` inserts
-a round-robin repartition ahead of those stages.
+a round-robin repartition to ``sparkContext.defaultParallelism``
+ahead of those stages, so narrow single-file reads fan out to all
+cores before regex/shingle/hash work.
 
-The partition target is **conf-driven** (no ``df.rdd`` access — a
-``.rdd`` call forces a full physical-planning pass per invocation,
-a real tax on hot construction paths):
-
-- ``spark.sparkgraft.fanout.partitions`` — explicit target; ``0``
-  disables fan_out entirely (the right setting on a cluster whose
-  tables are already well-partitioned, where an extra round-robin
-  shuffle before the CPU stage would be waste).
-- unset → ``sparkContext.defaultParallelism`` (local mode / default
-  deployments: matches core count, so narrow single-file reads fan
-  out to all cores before regex/shingle/hash work).
-
-At 100 TB the input scan is already ≥ thousands of partitions and the
-operator should be disabled via the conf; in local/test mode the
-repartition is the difference between 1-core and 32-core tokenize.
+The target comes from the context, never from ``df.rdd`` — a ``.rdd``
+call forces a full physical-planning pass per invocation, a real tax
+on hot construction paths.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-FANOUT_CONF = "spark.sparkgraft.fanout.partitions"
 
-
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition to the conf-driven target (see module
-    docstring). Streaming DataFrames pass through untouched
-    (micro-batch sizing belongs to the source's
-    ``maxFilesPerTrigger``). Never inspects ``df.rdd`` — plan
-    construction stays free of physical-planning passes."""
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``defaultParallelism``. Streaming
+    DataFrames pass through untouched (micro-batch sizing belongs to
+    the source's ``maxFilesPerTrigger``). Never inspects ``df.rdd`` —
+    plan construction stays free of physical-planning passes."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    if min_partitions is not None:
-        target = min_partitions
-    else:
-        conf_target = spark.conf.get(FANOUT_CONF, None)
-        if conf_target is not None:
-            target = int(conf_target)
-        else:
-            target = spark.sparkContext.defaultParallelism
-    if target <= 0:
-        return df
-    return df.repartition(target)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -11,7 +11,7 @@ engine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from enriched_crime_incident_data_pipeline_spark.operators.dedup import (
     dedup_by_key,
@@ -19,6 +19,7 @@ from enriched_crime_incident_data_pipeline_spark.operators.dedup import (
 )
 from enriched_crime_incident_data_pipeline_spark.operators.derive import to_silver
 from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
+    dedup_and_propagate,
     propagate_emsstat,
 )
 from enriched_crime_incident_data_pipeline_spark.operators.ranks import (
@@ -31,7 +32,13 @@ from enriched_crime_incident_data_pipeline_spark.enrich.sides import (
     with_side_of_town,
 )
 from enriched_crime_incident_data_pipeline_spark.enrich.weather import with_weather
+from enriched_crime_incident_data_pipeline_spark.plans.events_adapter import (
+    events_as_incidents_raw,
+    synthetic_location_dim,
+    synthetic_weather_hourly,
+)
 from enriched_crime_incident_data_pipeline_spark.sinks.output import gold_projection
+from enriched_crime_incident_data_pipeline_spark.sources.catalog import load_table
 
 
 def enrich_incidents(
@@ -83,3 +90,31 @@ def run_pipeline(
     )
     enriched = enrich_incidents(silver, location_cache, weather_hourly)
     return gold_projection(enriched)
+
+
+def build_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full §3.1 pipeline over the fixture tables: the enriched
+    incidents DataFrame (all columns, pre-projection). The flagship
+    query and the CLI's ``report``/``export`` both build from here."""
+    events = load_table(spark, sf_dir, "events")
+    silver = to_silver(events_as_incidents_raw(events))
+    # dedup + EMSSTAT fused onto one (ts, location) shuffle (duplicate
+    # incident rows agree on ts/location); the result feeds both the
+    # enrichment DAG and the weather work-list. Pins are
+    # localCheckpoints, not persist: they cut the lineage from every
+    # consumer's plan and leave no CacheManager entry behind. base is
+    # LAZY — the weather cut below is its first consumer and scans
+    # every partition, so its (eager) job materializes base's blocks
+    # and no dedicated base job runs. wh stays EAGER: the gold job
+    # references base through two subtrees (its own joins + wh's
+    # lineage), and sequencing the wh job first is what guarantees
+    # base materializes exactly once. In deployment the weather table
+    # IS a maintained table; unpinned, its work-list aggregation
+    # re-runs inside the gold job. Measured (sf0.1, median-of-3
+    # end-to-end): 3.7 -> 2.5 s against a lazy persist of base.
+    base = dedup_and_propagate(silver).localCheckpoint(eager=False)
+    dim = synthetic_location_dim(events)
+    wh = synthetic_weather_hourly(with_coordinates(base, dim)).localCheckpoint(
+        eager=True
+    )
+    return enrich_after_emsstat(base, dim, wh)

@@ -589,7 +589,7 @@ def q_corpus_build3(spark, sf_dir):
     #    bytes up front parallelizes every downstream stage; the cut
     #    makes the wide form the one the three artifact consumers
     #    below re-read. On a cluster the scan already arrives split
-    #    and fan_out is conf-disabled.
+    #    and the exchange only re-balances it.
     # LAZY cut (r5 barrier trim): the first consumer is the `art`
     # union collect below, which scans every partition of both
     # branches — Spark's post-job doCheckpoint then owns the blocks,

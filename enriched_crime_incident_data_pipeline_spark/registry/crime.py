@@ -13,11 +13,10 @@ from enriched_crime_incident_data_pipeline_spark.enrich.geocode import geocode_m
 from enriched_crime_incident_data_pipeline_spark.enrich.weather import with_weather
 from enriched_crime_incident_data_pipeline_spark.functions.geography import side_of_town_col
 from enriched_crime_incident_data_pipeline_spark.operators.dedup import idempotent_append
-from enriched_crime_incident_data_pipeline_spark.operators.derive import to_silver
 from enriched_crime_incident_data_pipeline_spark.operators.emsstat import propagate_emsstat_selfjoin
 from enriched_crime_incident_data_pipeline_spark.operators.health import null_count_health
 from enriched_crime_incident_data_pipeline_spark.operators.ranks import frequency_rank_table, with_frequency_rank
-from enriched_crime_incident_data_pipeline_spark.plans.events_adapter import (events_as_incidents_raw, synthetic_location_dim, synthetic_weather_hourly)
+from enriched_crime_incident_data_pipeline_spark.plans.events_adapter import (synthetic_location_dim, synthetic_weather_hourly)
 from enriched_crime_incident_data_pipeline_spark.sources.catalog import load_table
 from enriched_crime_incident_data_pipeline_spark.sources.urls import classify_report_urls
 
@@ -40,43 +39,14 @@ from enriched_crime_incident_data_pipeline_spark.registry._shared import (
 
 
 def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
-        dedup_and_propagate,
-    )
     from enriched_crime_incident_data_pipeline_spark.plans.pipeline import (
-        enrich_after_emsstat,
+        build_enriched,
     )
     from enriched_crime_incident_data_pipeline_spark.sinks.output import (
         gold_projection,
     )
 
-    events = load_table(spark, sf_dir, "events")
-    silver = to_silver(events_as_incidents_raw(events))
-    # dedup + EMSSTAT fused onto one (ts, location) shuffle (duplicate
-    # incident rows agree on ts/location); the result feeds both the
-    # enrichment DAG and the weather work-list. EAGER localCheckpoint,
-    # not lazy persist: the parse+shuffle lineage runs once as its own
-    # job and is CUT from every consumer's plan (a lazy persist leaves
-    # the full lineage in the first consumer's plan and only caches as
-    # a side effect). The weather table is pinned for the same reason:
-    # in deployment it IS a maintained table, and unpinned its
-    # work-list aggregation re-runs inside the gold job. Measured
-    # (sf0.1, median-of-3 end-to-end): 3.7 -> 2.5 s.
-    # r5 session-2: base goes LAZY — Dataset.localCheckpoint truncates
-    # the logical plan at call time either way (the 3.7→2.5 s note
-    # above contrasted eager checkpoint vs lazy PERSIST, which doesn't
-    # truncate); the weather cut below is base's first consumer and
-    # scans every partition, so its (still eager) job materializes
-    # base's blocks and the dedicated base job disappears. wh stays
-    # EAGER: the gold job references base through two subtrees (its
-    # own joins + wh's lineage), and sequencing the wh job first is
-    # what guarantees base materializes exactly once.
-    base = dedup_and_propagate(silver).localCheckpoint(eager=False)
-    dim = synthetic_location_dim(events)
-    wh = synthetic_weather_hourly(with_coordinates(base, dim)).localCheckpoint(
-        eager=True
-    )
-    return gold_projection(enrich_after_emsstat(base, dim, wh))
+    return gold_projection(build_enriched(spark, sf_dir))
 
 # ---------------------------------------------------------------------------
 # §2.2 projections / filters

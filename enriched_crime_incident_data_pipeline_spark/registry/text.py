@@ -145,10 +145,9 @@ def q_ta6_winnow(spark, sf_dir):
     # table arrives as ONE parquet row group, so this map-only query
     # (no shuffle anywhere downstream) ran on a single core end to
     # end: measured 2.66 → 0.35 s at sf0.1 and 40.2 → 1.9 s at sf1
-    # (interleaved A/B). Same conf-driven primitive every other heavy
-    # per-row text derivation here uses (minhash/shingle/segment
-    # paths); disabled via spark.sparkgraft.fanout.partitions=0 on
-    # deployments whose scans already arrive well-partitioned.
+    # (interleaved A/B). Same primitive every other heavy per-row
+    # text derivation here uses (minhash/shingle/segment paths); it
+    # targets defaultParallelism.
     from enriched_crime_incident_data_pipeline_spark.functions.text import (
         winnow_fingerprint,
     )

@@ -62,6 +62,10 @@ from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
     minhash_bands,
     rebuild_winners,
 )
+from enriched_crime_incident_data_pipeline_spark.session import scoped_conf
+from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
+    STATE_PARTITIONS,
+)
 
 # r11 (verdict item 1): ONE state relation instead of three. Band
 # rows (every seen doc), surviving segment hashes, and rebuilt corpus
@@ -246,58 +250,47 @@ def corpus_ingest_batch(
     return fn
 
 
-def run_corpus_ingest_stream(
+def _run_fold(
     spark: SparkSession,
     docs_dir: str,
     schema,
     state_dir: str,
-    seg_tokens: int = 10,
-    state_partitions: int | str | None = "auto",
-) -> DataFrame:
+    fn: Callable[[DataFrame, int], None],
+    state_partitions: int | None,
+) -> None:
     """Run an AvailableNow documents stream from ``docs_dir`` (one
-    micro-batch per file, in file-timestamp order) through
-    :func:`corpus_ingest_batch` and return the resulting corpus
-    state ``(doc_id, n_kept, deduped_text)``.
+    micro-batch per file, in file-timestamp order) through the
+    ``foreachBatch`` fold ``fn``, with a fresh checkpoint under
+    ``state_dir``.
 
     ``state_partitions`` sizes ``spark.sql.shuffle.partitions`` for
-    the per-batch fold — the same deployment knob as
-    ``run_available_now``: every wide op inside the fold (band probe,
-    seen-segment anti-join, keeper aggregate, rebuild groupBy) runs
-    over BATCH-sized relations, so task count should track batch
-    volume, not CPU count; it also bounds the file count of each
-    per-batch state write, which the next batch pays to re-read. The
-    default ``"auto"`` resolves the ``$SPARK_GRAFT_STATE_PARTITIONS``
-    deployment knob (``streaming.windows.default_state_partitions``).
-    The session conf is restored after the bounded run."""
-    from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
-        default_state_partitions,
-    )
-
-    if state_partitions == "auto":
-        state_partitions = default_state_partitions()
+    the fold: every wide op inside it runs over BATCH-sized relations,
+    so task count should track batch volume, not CPU count; it also
+    bounds the file count of each per-batch state write, which the
+    next batch pays to re-read. ADAPTIVE EXECUTION IS OFF with it
+    (r11): Structured Streaming itself never applies AQE to
+    micro-batch plans, but a foreachBatch body is a batch plan where
+    Spark leaves it on; here every shuffle is already pinned to
+    ``state_partitions`` (nothing for AQE coalescing to do) and AQE
+    materializes EVERY exchange as its own driver job — measured
+    17 → 9 jobs per st28 batch / 10-14 → 3-6 per st7 batch,
+    ~0.3-0.8 s/batch at sf0.1. ``None`` keeps the session conf (the
+    way back for a deployment whose band buckets skew). The conf is
+    scoped to the stream run only."""
+    conf = {}
+    if state_partitions is not None:
+        conf = {
+            "spark.sql.shuffle.partitions": str(state_partitions),
+            "spark.sql.adaptive.enabled": "false",
+        }
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
     )
-    # AQE off for the fold (r11): the fold's shuffles are pinned to
-    # ``state_partitions`` (nothing for AQE coalescing to do) and AQE
-    # materializes every exchange as its own driver job — measured
-    # 10-14 → 3-6 jobs per batch, ~0.3-0.8 s/batch at sf0.1; see
-    # corpus_refresh.py's runner for the full rationale. Restored
-    # after the bounded run.
-    prev = None
-    prev_aqe = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, conf):
         q = (
-            stream.writeStream.foreachBatch(
-                corpus_ingest_batch(state_dir, seg_tokens)
-            )
+            stream.writeStream.foreachBatch(fn)
             .option(
                 "checkpointLocation", _p(state_dir, f"_ckpt_{uuid.uuid4().hex}")
             )
@@ -305,11 +298,28 @@ def run_corpus_ingest_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
+def run_corpus_ingest_stream(
+    spark: SparkSession,
+    docs_dir: str,
+    schema,
+    state_dir: str,
+    seg_tokens: int = 10,
+    state_partitions: int | None = STATE_PARTITIONS,
+) -> DataFrame:
+    """Run the documents in ``docs_dir`` through
+    :func:`corpus_ingest_batch` (see :func:`_run_fold` for the stream
+    shape and ``state_partitions``) and return the resulting corpus
+    state ``(doc_id, n_kept, deduped_text)``."""
+    _run_fold(
+        spark,
+        docs_dir,
+        schema,
+        state_dir,
+        corpus_ingest_batch(state_dir, seg_tokens),
+        state_partitions,
+    )
     return (
         spark.read.parquet(_p(state_dir, _STATE))
         .filter(F.col("n_kept").isNotNull())

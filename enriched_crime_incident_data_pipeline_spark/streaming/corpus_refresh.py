@@ -52,7 +52,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +67,10 @@ from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
 )
 from enriched_crime_incident_data_pipeline_spark.functions.text import (
     doc_fingerprint,
+)
+from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+    STATE_PARTITIONS,
+    _run_fold,
 )
 
 # r11 (verdict item 1): ONE state relation instead of three. Band
@@ -262,7 +265,7 @@ def run_corpus_refresh_stream(
     eval_docs: DataFrame,
     cutoff: int,
     ngram: int = 8,
-    state_partitions: int | str | None = "auto",
+    state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Seed the refresh state from ``old_docs`` (band index +
     fingerprint set) and ``eval_docs`` (static gram set), run an
@@ -270,7 +273,9 @@ def run_corpus_refresh_stream(
     through :func:`corpus_refresh_batch`, and return the accumulated
     verdict table ``(doc_id, verdict)`` — one row per arriving doc,
     pinned ≡ the batch refresh (``q_corpus_refresh1``) for any
-    id-ordered split."""
+    id-ordered split. ``state_partitions`` and the AQE-off conf apply
+    to the fold only (:func:`corpus_ingest._run_fold`); the seed runs
+    under the session conf."""
     # seed: old bands + old fingerprints under batch=-1 (a real batch
     # id is ≥ 0, so the replay-exclusion filter never drops the seed)
     # in ONE write (r11) — the standing corpus is the BIG side at
@@ -282,72 +287,31 @@ def run_corpus_refresh_stream(
         bands_from_sigs,
         with_minhash_cols,
     )
-    from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
-        default_state_partitions,
-    )
 
-    if state_partitions == "auto":
-        state_partitions = default_state_partitions()
-    # conf scope covers seed + fold (r11): shuffle partitions track
-    # state volume, and ADAPTIVE EXECUTION IS OFF for the fold —
-    # Structured Streaming itself never applies AQE to micro-batch
-    # plans (repeated re-planning doesn't amortize), but a
-    # foreachBatch body is a batch plan where Spark leaves it on;
-    # here every shuffle is already pinned to ``state_partitions``
-    # (nothing for AQE coalescing to do) and AQE materializes EVERY
-    # exchange as its own driver job — measured 17 → 9 jobs per st28
-    # batch / 10-14 → 3-6 per st7 batch, ~0.3-0.8 s/batch at sf0.1.
-    # A deployment whose band buckets skew re-enables AQE by sizing
-    # partitions via $SPARK_GRAFT_STATE_PARTITIONS and flipping the
-    # session conf — the fold restores whatever was set before.
-    prev = None
-    prev_aqe = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        old_base = with_minhash_cols(
-            old_docs.select(
-                "doc_id",
-                "text",
-                doc_fingerprint(F.col("text")).alias("fingerprint"),
-            )
-            # text is consumed inside the same pass; drop it before the
-            # pin so the checkpointed relation is (id, fp, 16 longs)
-        ).drop("text").localCheckpoint(eager=False)
-        _band_kind(bands_from_sigs(old_base)).unionByName(
-            _fingerprint_kind(old_base.select("fingerprint").distinct())
-        ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
-        eval_grams = frozenset(
-            r[0]
-            for r in doc_ngrams(eval_docs, ngram)
-            .select("gram")
-            .distinct()
-            .collect()
+    old_base = with_minhash_cols(
+        old_docs.select(
+            "doc_id",
+            "text",
+            doc_fingerprint(F.col("text")).alias("fingerprint"),
         )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(new_docs_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                corpus_refresh_batch(state_dir, cutoff, eval_grams, ngram)
-            )
-            .option(
-                "checkpointLocation", _p(state_dir, f"_ckpt_{uuid.uuid4().hex}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        # text is consumed inside the same pass; drop it before the
+        # pin so the checkpointed relation is (id, fp, 16 longs)
+    ).drop("text").localCheckpoint(eager=False)
+    _band_kind(bands_from_sigs(old_base)).unionByName(
+        _fingerprint_kind(old_base.select("fingerprint").distinct())
+    ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
+    eval_grams = frozenset(
+        r[0]
+        for r in doc_ngrams(eval_docs, ngram).select("gram").distinct().collect()
+    )
+    _run_fold(
+        spark,
+        new_docs_dir,
+        schema,
+        state_dir,
+        corpus_refresh_batch(state_dir, cutoff, eval_grams, ngram),
+        state_partitions,
+    )
     return (
         spark.read.parquet(_p(state_dir, _STATE))
         .filter(F.col("verdict").isNotNull())

@@ -21,7 +21,6 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def stream_events(
@@ -30,30 +29,12 @@ def stream_events(
     """events.parquet as a streaming DataFrame (ts converted from
     stored nanos to micro-precision timestamps, as in the batch
     loader)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    # the file source streams *directories* (new files appear, the
-    # checkpoint tracks which were seen); the testdata table is a bare
-    # file, so stage a symlink under a per-sf scratch dir — the same
-    # shape a live feed has, one parquet file per arriving report
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stage)
     from enriched_crime_incident_data_pipeline_spark.sources.catalog import (
         as_micros_timestamp,
     )
 
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = stream_table(spark, sf_dir, "events", max_files_per_trigger)
     return df.withColumn("ts", as_micros_timestamp(df, "ts"))
 
 
@@ -72,11 +53,14 @@ def stream_table(
     name: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Any testdata table as a streaming DataFrame via the same
-    staged-symlink file source ``stream_events`` uses (one parquet
-    file per "arriving" batch, checkpoint-tracked)."""
+    """Any testdata table as a streaming DataFrame (one parquet file
+    per "arriving" batch, checkpoint-tracked)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = spark.read.parquet(path).schema
+    # the file source streams *directories* (new files appear, the
+    # checkpoint tracks which were seen); the testdata table is a bare
+    # file, so stage a symlink under a per-table scratch dir — the
+    # same shape a live feed has, one parquet file per arriving report
     stage = os.path.join(
         tempfile.gettempdir(),
         "spark_graft_stream",

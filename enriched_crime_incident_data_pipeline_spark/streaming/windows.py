@@ -15,28 +15,19 @@ regardless of where the final watermark lands.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Deployment knob for the bounded-run state partitioning (r11,
-# verdict item 6): ONE env-resolved default instead of a literal at
-# every registry call site. 4 is the measured optimum for bench-SF
-# state volume (hundreds of keys — far below one partition's worth;
-# the r4/r10 audits measured fixed per-partition store-commit cost
-# dominating: st5 7.9 s @ 32 -> 2.7 @ 8 -> 2.80 @ 4). A deployment
-# with real state volume sets SPARK_GRAFT_STATE_PARTITIONS to
-# ceil(state rows x bytes-per-key / target-partition-bytes) — size to
-# STATE, not CPU count.
-_STATE_PARTITIONS_ENV = "SPARK_GRAFT_STATE_PARTITIONS"
+from enriched_crime_incident_data_pipeline_spark.session import scoped_conf
 
-
-def default_state_partitions() -> int:
-    """The env-resolved state-partition default for bounded streaming
-    runs (``$SPARK_GRAFT_STATE_PARTITIONS``, default 4 — see the
-    module comment for the sizing rule)."""
-    return int(os.environ.get(_STATE_PARTITIONS_ENV, "4"))
+# State partitioning for the bounded runs: 4 is the measured optimum
+# for bench-SF state volume (hundreds of keys — far below one
+# partition's worth; the r4/r10 audits measured fixed per-partition
+# store-commit cost dominating: st5 7.9 s @ 32 -> 2.7 @ 8 -> 2.80 @ 4).
+# Real state volume sizes it to ceil(state rows x bytes-per-key /
+# target-partition-bytes) — size to STATE, not CPU count — by passing
+# ``state_partitions`` explicitly.
+STATE_PARTITIONS = 4
 
 
 def tumbling_counts(
@@ -97,14 +88,14 @@ def run_available_now(
     sdf: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_partitions: int | str | None = "auto",
+    state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion over all currently
     available input (``Trigger.AvailableNow``) into an in-memory
     table and return it as a batch DataFrame.
 
     ``state_partitions`` sizes the STATE partitioning of stateful
-    operators — a first-class deployment knob, not a bench trick:
+    operators — a first-class deployment parameter, not a bench trick:
     Spark locks ``spark.sql.shuffle.partitions`` into the checkpoint
     at the query's first batch, every state partition instantiates
     its own store (a stream-stream join runs FOUR stores per side per
@@ -115,31 +106,25 @@ def run_available_now(
     with 8, with state commit (not data) the dominant line in
     ``stateOperators.commitTimeMs``; the r10 re-audit measured the
     same join at 3.22 s with 8 vs 2.80 with 4 (interleaved medians),
-    so the registry's stateful bounded runs now pass 4 — at bench
-    SFs every stateful operator holds hundreds of keys, far below
-    one partition's worth of state. Size to state volume (rows ×
-    bytes per key), not to CPU count; on a 1000-executor deployment
-    the same reasoning picks a LARGER number than the input-scan
-    parallelism only when state actually needs it. The default
-    ``"auto"`` resolves :func:`default_state_partitions` (the
-    ``$SPARK_GRAFT_STATE_PARTITIONS`` deployment knob — r11 verdict
-    item 6: one env-resolved default instead of a literal at every
-    registry call site); ``None`` keeps the session default. The
-    session conf is restored after the bounded run (the value stays
-    pinned in the checkpoint, which is per-run here).
+    hence the :data:`STATE_PARTITIONS` default — at bench SFs every
+    stateful operator holds hundreds of keys, far below one
+    partition's worth of state. Size to state volume (rows × bytes
+    per key), not to CPU count; on a 1000-executor deployment the
+    same reasoning picks a LARGER number than the input-scan
+    parallelism only when state actually needs it. ``None`` keeps the
+    session default. The conf is scoped to the bounded run with
+    :func:`session.scoped_conf` (the value stays pinned in the
+    checkpoint, which is per-run here).
 
     This is the test/backfill harness; production sinks swap
     ``format("memory")`` for parquet/Delta + checkpointLocation with
     the same trigger.
     """
     spark = sdf.sparkSession
-    if state_partitions == "auto":
-        state_partitions = default_state_partitions()
-    prev = None
+    conf = {}
     if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with scoped_conf(spark, conf):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -148,7 +133,4 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

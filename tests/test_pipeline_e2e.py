@@ -141,6 +141,17 @@ def test_cli_report_and_export(spark, tmp_path, capsys):
     )
 
 
+def test_cli_export_leaves_no_cached_plan(spark, tmp_path):
+    """``export`` pins its intermediates with localCheckpoint, never
+    persist: the session's CacheManager holds no entry afterwards, so
+    repeated exports do not accumulate cached plans."""
+    from enriched_crime_incident_data_pipeline_spark.__main__ import main
+
+    spark.catalog.clearCache()
+    assert main(["export", "--out", str(tmp_path / "csv")]) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cli_list_run_explain(spark, capsys):
     """The exploration subcommands: `list` enumerates the registry,
     `run` prints rows, `explain` prints the physical plan, unknown

@@ -557,28 +557,15 @@ def test_st33_multibatch_order_audit_equals_batch_dq12(spark, tmp_path):
     assert got == [(9, 1, 1111, 130, 1)]
 
 
-def test_state_partitions_env_default(monkeypatch):
-    """r11 (verdict item 6): the bounded-run state partitioning is one
-    env-resolved deployment default, not a literal at every registry
-    call site — SPARK_GRAFT_STATE_PARTITIONS drives it, 4 is the
-    measured bench-SF optimum fallback."""
-    from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
-        default_state_partitions,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
-    assert default_state_partitions() == 4
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "16")
-    assert default_state_partitions() == 16
-
-
-def test_run_available_now_auto_resolves_env(spark, monkeypatch, tmp_path):
-    """The "auto" default must apply the env-resolved partition count
-    to the bounded run (observable via the state-store shuffle) and
-    restore the session conf afterwards."""
+def test_run_available_now_restores_conf(spark, tmp_path):
+    """The bounded run scopes ``spark.sql.shuffle.partitions`` to
+    itself: a session value other than STATE_PARTITIONS is the same
+    before and after."""
     import pyspark.sql.functions as F
 
+    from enriched_crime_incident_data_pipeline_spark.session import scoped_conf
     from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
+        STATE_PARTITIONS,
         run_available_now,
     )
 
@@ -586,13 +573,42 @@ def test_run_available_now_auto_resolves_env(spark, monkeypatch, tmp_path):
     spark.createDataFrame(
         [(1, "a"), (2, "b")], "id long, k string"
     ).write.parquet(src)
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "2")
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    stream = spark.readStream.schema("id long, k string").parquet(src)
-    out = run_available_now(
-        stream.groupBy("k").agg(F.count(F.lit(1)).alias("n")),
-        "t_auto_state_parts",
-        "complete",
+    session_value = str(STATE_PARTITIONS + 1)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": session_value}):
+        stream = spark.readStream.schema("id long, k string").parquet(src)
+        out = run_available_now(
+            stream.groupBy("k").agg(F.count(F.lit(1)).alias("n")),
+            "t_restore_state_parts",
+            "complete",
+        )
+        assert sorted(tuple(r) for r in out.collect()) == [("a", 1), ("b", 1)]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == session_value
+
+
+def test_stream_events_colliding_stage_names(spark, tmp_path):
+    """Two sf dirs whose paths flatten to the same stage name
+    (``x/a_b`` and ``x_a/b``) each stream their OWN events: the second
+    call re-points the staged link instead of reusing the first's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from enriched_crime_incident_data_pipeline_spark.streaming import (
+        run_available_now,
+        stream_events,
     )
-    assert sorted(tuple(r) for r in out.collect()) == [("a", 1), ("b", 1)]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    dirs = [tmp_path / "x" / "a_b", tmp_path / "x_a" / "b"]
+    for i, d in enumerate(dirs):
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"id": [i], "ts": pa.array([0], pa.timestamp("us"))}),
+            str(d / "events.parquet"),
+        )
+    for i, d in enumerate(dirs):
+        out = run_available_now(
+            stream_events(spark, str(d)).select("id"),
+            f"t_stage_collision_{i}",
+            "append",
+            state_partitions=None,
+        )
+        assert [r[0] for r in out.collect()] == [i]
